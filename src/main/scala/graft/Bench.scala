@@ -144,16 +144,19 @@ object Bench {
     val soloRuns: Seq[(String, Double)] = {
       val base = try {
         val dir = java.nio.file.Paths.get("tools")
-        val cands = java.nio.file.Files.list(dir).iterator()
+        val listing = java.nio.file.Files.list(dir)
         val re = "bench_baseline_r(\\d+)\\.json".r
         var bestN = -1; var bestP: java.nio.file.Path = null
-        while (cands.hasNext) {
-          val p = cands.next()
-          p.getFileName.toString match {
-            case re(n) if n.toInt > bestN => bestN = n.toInt; bestP = p
-            case _ =>
+        try {
+          val cands = listing.iterator()
+          while (cands.hasNext) {
+            val p = cands.next()
+            p.getFileName.toString match {
+              case re(n) if n.toInt > bestN => bestN = n.toInt; bestP = p
+              case _ =>
+            }
           }
-        }
+        } finally listing.close()
         if (bestP == null) Map.empty[String, Double]
         else {
           val txt = java.nio.file.Files.readString(bestP)

@@ -26,14 +26,15 @@ object SketchOps {
     * every intermediate exact in signed 64-bit. */
   val MinHashP: Long = 268435399L
 
-  private def tokens(text: String): Array[String] = {
+  private def tokens(text: String,
+      isSep: Int => Boolean = Character.isWhitespace(_: Int)): Array[String] = {
     if (text == null) return Array.empty
     val out = new scala.collection.mutable.ArrayBuffer[String]()
     var start = -1
     var i = 0
     val n = text.length
     while (i <= n) {
-      if (i == n || Character.isWhitespace(text.charAt(i))) {
+      if (i == n || isSep(text.charAt(i))) {
         if (start >= 0) { out += text.substring(start, i); start = -1 }
       } else if (start < 0) start = i
       i += 1
@@ -81,6 +82,38 @@ object SketchOps {
       }
     }
     new GenericArrayData(mins)
+  }
+
+  /** Java-regex `\s`: the six ASCII separators `[ \t\n\x0B\f\r]`. */
+  private def isRegexSpace(c: Int): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Distinct word `n`-gram shingles of `text`, joined by one space, in
+    * first-occurrence order — the exact-Jaccard verification space of the
+    * dedup family. Tokens are the runs between Java-regex `\s` separators
+    * (NOT the signature's `Character.isWhitespace`: U+3000, U+2028 and
+    * friends are token characters here). `n <= 1` gives the distinct token
+    * set; fewer than `n` tokens give one whole-text shingle (`""` for a
+    * token-less text). Native because Catalyst eliminates no common
+    * subexpressions inside lambdas: a Column form slicing `split(text)`
+    * inside `transform` re-runs the regex split once per shingle. */
+  def wordShingles(text: UTF8String, n: Int): ArrayData = {
+    val toks = tokens(text.toString, isRegexSpace)
+    val out = new java.util.LinkedHashSet[String]()
+    if (n <= 1) toks.foreach(out.add)
+    else if (toks.length < n) out.add(toks.mkString(" "))
+    else {
+      val sb = new java.lang.StringBuilder()
+      var i = 0
+      while (i + n <= toks.length) {
+        sb.setLength(0)
+        sb.append(toks(i))
+        var j = 1
+        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
+        out.add(sb.toString)
+        i += 1
+      }
+    }
+    new GenericArrayData(out.toArray.map(t => UTF8String.fromString(t.asInstanceOf[String])))
   }
 
   /** 60-bit SimHash over unit-weight token occurrences: bit `b` is set when
@@ -159,6 +192,22 @@ case class MinHashSignature(child: Expression, numHashes: Int = 64,
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
       s"graft.expr.SketchOps.minHashSignature($c, $numHashes, $shingleSize, ${seed}L)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Word-shingle expression: `STRING → ARRAY<STRING>`, the distinct word
+  * `n`-grams of [[SketchOps.wordShingles]]. */
+case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "word_shingles"
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${child.dataType.sql}")
+  override protected def nullSafeEval(s: Any): Any =
+    SketchOps.wordShingles(s.asInstanceOf[UTF8String], n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.expr.SketchOps.wordShingles($c, $n)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

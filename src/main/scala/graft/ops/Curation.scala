@@ -816,19 +816,22 @@ object Curation {
   def ictPairs(df: DataFrame, idCol: Column, textCol: Column,
       unitTokens: Int = 4): DataFrame = {
     require(unitTokens > 0, "unitTokens must be > 0")
-    val id = idCol.cast("long")
-    val toks = array_remove(split(trim(textCol), "\\s+"), "")
+    // tokens project first: referenced inside the unit lambda, the regex
+    // split would otherwise re-run once per unit
+    val toks = col("__tk")
     val nUnits = ceil(size(toks) / lit(unitTokens.toDouble)).cast("int")
     val units = transform(sequence(lit(0), nUnits - 1),
       i => concat_ws(" ", slice(toks, i * unitTokens + 1, lit(unitTokens))))
     // greatest(·, 1): unit-less docs drop below, but ANSI mode evaluates
     // the projection before the filter — never mod by zero
     val qIdx = (graft.expr.PortableHash.hex15Col(
-      concat(lit("ict:"), id.cast("string"))) % greatest(nUnits, lit(1)))
+      concat(lit("ict:"), col("id").cast("string"))) % greatest(nUnits, lit(1)))
       .cast("int")
     val keep = graft.expr.PortableHash.hex15Col(
-      concat(lit("ictkeep:"), id.cast("string"))) % 10 === 0
-    df.select(id.as("id"), nUnits.as("n_units"), qIdx.as("q_idx"),
+      concat(lit("ictkeep:"), col("id").cast("string"))) % 10 === 0
+    df.select(idCol.cast("long").as("id"),
+        array_remove(split(textCol, "\\s+"), "").as("__tk"))
+      .select(col("id"), nUnits.as("n_units"), qIdx.as("q_idx"),
         units.as("__u"), keep.as("kept"))
       .filter(col("n_units") >= 2)
       .select(col("id"), col("n_units").cast("long").as("n_units"),
@@ -1048,17 +1051,15 @@ object Curation {
       maxDf: Int = 10): DataFrame = {
     require(n >= 1 && minShared >= 1 && maxDf >= 2,
       "need n >= 1, minShared >= 1, maxDf >= 2")
-    def gramOf(t: Column, nn: Int): Column = {
-      val toks = array_remove(split(trim(t), "\\s+"), "")
-      when(size(toks) < nn, array().cast("array<string>"))
-        .otherwise(transform(sequence(lit(0), size(toks) - nn),
-          i => concat_ws(" ", slice(toks, i + 1, lit(nn)))))
-    }
+    // the token array is its own projection: inside the gram lambda the
+    // regex split would re-run once per gram (QualitySignals.grams)
     val grams = Dedup.spreadSmallScan(
         df.select(idCol.cast("long").as("id"),
           splitCol.cast("string").as("split"), textCol.as("__t")), col("id"))
       .select(col("id"), col("split"),
-        explode(array_distinct(gramOf(col("__t"), n))).as("g"))
+        array_remove(split(col("__t"), "\\s+"), "").as("__tk"))
+      .select(col("id"), col("split"),
+        explode(array_distinct(QualitySignals.grams(col("__tk"), n))).as("g"))
       .select(col("id"), col("split"),
         graft.expr.PortableHash.hex15Col(col("g")).as("h"))
     val hot = grams.groupBy("h").agg(count(lit(1)).as("df"))
@@ -1324,12 +1325,12 @@ object Curation {
       stride: Int = 8, spanLen: Int = 2): DataFrame = {
     require(spanLen >= 1 && stride > spanLen,
       "need spanLen >= 1 and stride > spanLen")
-    val id = idCol.cast("long")
-    val toks = array_remove(split(trim(textCol), "\\s+"), "")
-    // stage 1: materialize the token list and the per-BLOCK offset array
+    // stage 1: materialize the token list, then the per-BLOCK offset array
     // (ONE md5 per block, not per token — the hoist that keeps the pass
-    // linear in tokens, not tokens × md5-cost); -1 = block uncorrupted
-    val n0 = size(toks)
+    // linear in tokens, not tokens × md5-cost); -1 = block uncorrupted.
+    // The offset lambda reads the PROJECTED token column: over the split
+    // expression itself it would re-run the regex split once per block
+    val n0 = size(col("_toks"))
     val nBlocks = ceil(n0 / lit(stride.toDouble)).cast("int")
     val offs = when(n0 === 0, array().cast("array<bigint>"))
       .otherwise(transform(sequence(lit(0), nBlocks - 1), b => {
@@ -1337,10 +1338,12 @@ object Curation {
         val room = blockLen - spanLen + 1
         when(blockLen >= spanLen,
           graft.expr.PortableHash.hex15Col(
-            concat(id, lit(":sc:"), b.cast("long"))) % room)
+            concat(col("id"), lit(":sc:"), b.cast("long"))) % room)
           .otherwise(lit(-1L))
       }))
-    val staged = df.select(id.as("id"), toks.as("_toks"), offs.as("_offs"))
+    val staged = df.select(idCol.cast("long").as("id"),
+        array_remove(split(textCol, "\\s+"), "").as("_toks"))
+      .select(col("id"), col("_toks"), offs.as("_offs"))
     // stage 2: materialize the classified token list once (`_marked` is
     // consumed three times below — as a named column it evaluates once)
     val n = size(col("_toks"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
-import graft.expr.{MinHashSignature, SimHash}
+import graft.expr.{MinHashSignature, SimHash, WordShingles}
 
 /**
  * Deduplication operators for training-data pipelines (north-star
@@ -150,20 +150,16 @@ object Dedup {
   }
 
   /** Distinct word `shingleSize`-gram set of a text column (shingleSize = 1
-    * → unigram token set). MUST match the shingle space the MinHash
-    * signature was built over, or LSH candidates and verification measure
-    * different similarities. */
-  def shingleSet(textCol: Column, shingleSize: Int): Column = {
-    // array_remove "" so edge whitespace can't mint an empty token:
-    // SketchOps.tokens (the signature space) never produces one, and the
-    // MUST-match contract below extends to edge-whitespace documents
-    val toks = array_remove(split(textCol, "\\s+"), "")
-    if (shingleSize <= 1) array_distinct(toks)
-    else array_distinct(
-      when(size(toks) < shingleSize, array(concat_ws(" ", toks)))
-        .otherwise(transform(sequence(lit(0), size(toks) - shingleSize),
-          i => concat_ws(" ", slice(toks, i + 1, lit(shingleSize))))))
-  }
+    * → unigram token set), in first-occurrence order; see
+    * [[graft.expr.SketchOps.wordShingles]]. Tokens split on Java-regex `\s`
+    * (`[ \t\n\x0B\f\r]`), while the MinHash signature's tokens split on
+    * `Character.isWhitespace`. The two agree on those six but not on
+    * U+001C–U+001F, U+1680, U+2000–U+2006, U+2008–U+200A, U+2028, U+2029,
+    * U+205F or U+3000: signature separators, token characters here. On
+    * text carrying them, LSH candidates and verification measure slightly
+    * different shingle sets. */
+  def shingleSet(textCol: Column, shingleSize: Int): Column =
+    col_(WordShingles(Bridge.expression(textCol), shingleSize))
 
   /** Exact shingle-set Jaccard for given id pairs (verification step). */
   def verifyJaccard(pairs: DataFrame, df: DataFrame, idCol: Column,

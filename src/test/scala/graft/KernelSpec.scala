@@ -100,6 +100,87 @@ class KernelSpec extends AnyFunSuite {
     assert(h("x y z") == h("x y z"))
   }
 
+  test("wordShingles: tokens on regex \\s only, distinct in order, " +
+      "whole-text fallback, null in null out") {
+    def sh(s: String, n: Int): Seq[String] = {
+      val a = SketchOps.wordShingles(UTF8String.fromString(s), n)
+      (0 until a.numElements()).map(a.getUTF8String(_).toString)
+    }
+    assert(sh(" a\tb\n\u000Bc \f\r", 1) == Seq("a", "b", "c"))
+    assert(sh("a b a b a", 2) == Seq("a b", "b a"))
+    assert(sh("a b a b a", 5) == Seq("a b a b a"))
+    assert(sh("  a  b ", 3) == Seq("a b"))
+    assert(sh("", 3) == Seq("") && sh(" \t ", 2) == Seq(""))
+    assert(sh("", 1).isEmpty && sh(" \n ", 0).isEmpty)
+    // U+3000 and U+00A0 are token characters, not separators
+    assert(sh("x\u3000y z\u00A0w", 1) == Seq("x\u3000y", "z\u00A0w"))
+    val expr = graft.expr.WordShingles(
+      org.apache.spark.sql.catalyst.expressions.Literal(null,
+        org.apache.spark.sql.types.StringType), 3)
+    assert(expr.eval() == null)
+  }
+
+  test("WordShingles reproduces the regex-split Column form it replaced, " +
+      "order included, interpreted and codegen") {
+    import org.apache.spark.sql.{Column, Row, SparkSession}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    // the former Dedup.shingleSet body: the equivalence reference only
+    def reference(text: Column, n: Int): Column = {
+      val toks = array_remove(split(text, "\\s+"), "")
+      if (n <= 1) array_distinct(toks)
+      else array_distinct(
+        when(size(toks) < n, array(concat_ws(" ", toks)))
+          .otherwise(transform(sequence(lit(0), size(toks) - n),
+            i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
+    }
+    val fixed = Seq(null, "", " ", " \t\n\u000B\f\r ", "one", "one two",
+      "one two three", "a b c d e", " lead", "trail \n", "\tboth\r\n",
+      "a\tb\nc\u000Bd\fe\rf", "x\u3000y z", "x\u00A0y z \u00A0",
+      "\u3000", "a b a b a b a b", "a a a a a a", "p q r p q r p q r s")
+    // seeded random texts over a 6-word vocabulary (repeats guaranteed)
+    // with separator runs mixing the six regex separators and the
+    // whitespace-like characters that are NOT regex separators
+    val rnd = new scala.util.Random(20261017)
+    val vocab = Seq("a", "bb", "c\u00e9", "dd", "e", "f\u4e2d")
+    val seps = Seq(" ", "\t", "\n", "\u000B", "\f", "\r", "\u3000",
+      "\u00A0", "\u2028", "\u001C", "\u0085")
+    val random = Seq.fill(300) {
+      val sb = new StringBuilder
+      for (_ <- 0 until rnd.nextInt(14)) {
+        if (rnd.nextInt(4) == 0) sb ++= seps(rnd.nextInt(seps.size))
+        sb ++= vocab(rnd.nextInt(vocab.size))
+        for (_ <- 0 to rnd.nextInt(3)) sb ++= seps(rnd.nextInt(seps.size))
+      }
+      sb.toString
+    }
+    val texts = fixed ++ random
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "2")
+      .getOrCreate()
+    try {
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(texts.zipWithIndex.map { case (t, i) => Row(i, t) }: _*),
+        StructType(Seq(StructField("i", IntegerType), StructField("t", StringType))))
+      // the local relation folds in the optimizer (interpreted eval); the
+      // repartitioned copy runs through whole-stage codegen
+      for ((df, path) <- Seq(local -> "interpreted",
+          local.repartition(2) -> "codegen"); n <- Seq(1, 2, 3, 5)) {
+        val rows = df.select(col("i"), col("t"), reference(col("t"), n).as("r"),
+            graft.ops.Dedup.shingleSet(col("t"), n).as("k"))
+          .collect()
+        assert(rows.length == texts.size)
+        for (r <- rows) {
+          val (ref, got) = (r.getAs[collection.Seq[String]]("r"),
+            r.getAs[collection.Seq[String]]("k"))
+          assert(ref == got,
+            s"$path n=$n text=${Option(r.getString(1)).map(_.toSeq.map(_.toInt))}")
+        }
+      }
+    } finally spark.stop()
+  }
+
   test("lsh bucket: deterministic, scale-invariant, in range") {
     val rnd = new scala.util.Random(3)
     for (_ <- 1 to 50) {

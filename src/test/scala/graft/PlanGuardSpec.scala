@@ -145,6 +145,44 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"cross-split join must stay an equi-join on the gram hash:\n$p")
   }
 
+  /** Higher-order functions (in SQL form) of the optimized plan that
+    * hold a regex `StringSplit`: a lambda-side split re-runs once per
+    * array element — O(tokens²) per document. */
+  private def splitsInHofs(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, StringSplit}
+    df.queryExecution.optimizedPlan.collectWithSubqueries { case p => p.expressions }
+      .flatten.flatMap(_.collect {
+        case h: HigherOrderFunction if h.exists(_.isInstanceOf[StringSplit]) => h.sql
+      })
+  }
+
+  test("tokenize once: verifyJaccard, splitLeakage, ictPairs and " +
+      "spanCorruption plan no StringSplit inside a higher-order function") {
+    val d = docs
+    val pairs = d.select(col("doc_id").as("a_id"))
+      .crossJoin(d.select(col("doc_id").as("b_id")))
+    val frames = Seq(
+      "verifyJaccard" -> graft.ops.Dedup.verifyJaccard(pairs, d, col("doc_id"),
+        col("text")),
+      "splitLeakage" -> graft.ops.Curation.splitLeakage(d, col("doc_id"),
+        col("text"), graft.ops.Curation.splitAssign(col("doc_id")), n = 5),
+      "ictPairs" -> graft.ops.Curation.ictPairs(d, col("doc_id"), col("text")),
+      "spanCorruption" -> graft.ops.Curation.spanCorruption(d, col("doc_id"),
+        col("text")))
+    val offenders = frames.map { case (name, df) => name -> splitsInHofs(df) }
+      .filter(_._2.nonEmpty)
+    assert(offenders.isEmpty, "re-split inside a lambda:\n" +
+      offenders.map { case (n, hofs) => s"$n: ${hofs.mkString("\n  ")}" }
+        .mkString("\n"))
+    // the guard is live: forcing CollapseProject to inline the projected
+    // token column back into the unit lambda must trip it
+    val key = "spark.sql.optimizer.collapseProjectAlwaysInline"
+    spark.conf.set(key, "true")
+    try assert(splitsInHofs(graft.ops.Curation.ictPairs(d, col("doc_id"),
+      col("text"))).nonEmpty, "inlined token column went undetected")
+    finally spark.conf.unset(key)
+  }
+
   test("rendezvousShard compiles: no interpreted HOF (transform/array_max) " +
       "in the plan, whole-stage codegen covers the projection") {
     val p = plan(docs.select(graft.ops.Curation.rendezvousShard(
